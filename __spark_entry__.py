@@ -3167,7 +3167,7 @@ def oracle_sql() -> dict[str, str]:
           from cnt group by doc_id
         )
         select d.doc_id,
-               coalesce(e.n, 0) as n_words,
+               cast(coalesce(e.n, 0) as bigint) as n_words,
                round(greatest(coalesce(ln(e.n) - e.s / e.n, 0.0), 0.0), 4) as entropy
         from documents d left join ent e using (doc_id)
     """
@@ -3194,7 +3194,7 @@ def oracle_sql() -> dict[str, str]:
         select d.doc_id,
                coalesce(a.text, '') as text,
                coalesce(a.n_chunks, 0) as n_chunks,
-               coalesce(a.n_kept, 0) as n_kept
+               cast(coalesce(a.n_kept, 0) as bigint) as n_kept
         from documents d left join agg a using (doc_id)
     """
     # ExactSubstr dedup: windows keyed by TEXT here (the Spark side keys on
@@ -3425,7 +3425,7 @@ def oracle_sql() -> dict[str, str]:
         select k.doc_id,
                coalesce(a.text, '') as text,
                coalesce(a.n_chunks, 0) as n_chunks,
-               coalesce(a.n_kept, 0) as n_kept
+               cast(coalesce(a.n_kept, 0) as bigint) as n_kept
         from kept k left join agg a using (doc_id)
     """
     sql["decontaminate"] = r"""

@@ -12,6 +12,14 @@ column: a narrow, shuffle-free, Python-free projection that whole-stage
 codegen fuses into the scan. A 20k-span skew doc is just a big cell — no
 hot partition, no salting needed on this path.
 
+The normalization chain (NUL strip → T4 → T6 → T5, 24 ``regexp_replace``)
+runs ONCE per text span on both paths. Splitting and promoting reads the
+split result three times, and Catalyst does no common-subexpression
+elimination inside lambda bodies, so a split referenced from the per-span
+lambda would be re-inlined at each use (three plan copies, the chain run
+twice per span). :func:`_split_span` binds it as a higher-order-function
+argument instead, which Spark evaluates once.
+
 The salted exploded variant (:func:`extract_docs_salted`) exists for
 pipelines that must shuffle per-span (north_rule names salted repartitioning
 explicitly): it explodes spans with a salt bucket, processes
@@ -57,10 +65,8 @@ def _normalized_text(span_text: Column, doc_id: Column, image_base_path: str) ->
     return out
 
 
-def _split_span(span: Column, doc_id: Column, image_base_path: str) -> Column:
-    """One span → array of spans (media promoted, offsets filled later)."""
-    new_text = _normalized_text(span["text"], doc_id, image_base_path)
-    parts = F.split(new_text, _IMG_SENTINEL)
+def _promote_parts(parts: Column, span: Column) -> Column:
+    """Split parts of one span → spans: image tags become media spans."""
     # keep empty parts only when the span produced a single (possibly empty) part
     kept = F.when(F.size(parts) == 1, parts).otherwise(
         F.filter(parts, lambda p: p != "")
@@ -83,6 +89,23 @@ def _split_span(span: Column, doc_id: Column, image_base_path: str) -> Column:
                 F.lit(0).alias("offset"),
             )
         ),
+    )
+
+
+def _split_span(span: Column, doc_id: Column, image_base_path: str) -> Column:
+    """One span → array of spans (media promoted, offsets filled later).
+
+    ``_promote_parts`` reads the split three times, so the split is bound as
+    the argument of a one-element ``transform`` (evaluated once) rather than
+    referenced from a lambda body (re-inlined at each use); see "Scale
+    design". ``transform(array(x), f)[1] == f(x)``."""
+    new_text = _normalized_text(span["text"], doc_id, image_base_path)
+    return F.element_at(
+        F.transform(
+            F.array(F.split(new_text, _IMG_SENTINEL)),
+            lambda parts: _promote_parts(parts, span),
+        ),
+        1,
     )
 
 

@@ -83,7 +83,9 @@ def extract_doc(doc_id: str, spans: list[dict], image_base_path: str = "images")
         if s["kind"] == "media":
             out.append(dict(s))
             continue
-        t = apply_math_patterns(s["text"])
+        # content NULs are stripped before T4, as in
+        # operators.extract._normalized_text: NUL is the split sentinel
+        t = apply_math_patterns(s["text"].replace("\x00", ""))
         t = format_layout(t)
         t = insert_image_tags(t, doc_id, image_base_path, sentinel=True)
         parts = t.split(SENTINEL)

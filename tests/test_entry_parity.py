@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 import duckdb
+import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
@@ -42,6 +43,25 @@ def test_query_matches_oracle(spark, duck, name):
     spark_pdf = q(spark, SF_DIR).toPandas()
     duck_pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
     assert_frames_match(name, spark_pdf, duck_pdf)
+
+
+# DuckDB sum() is HUGEINT, which pandas reads as float64 ("32.0" vs Spark's
+# bigint 32): the driver's value hash tells them apart; the local canon does not.
+INTEGER_COUNTS = [
+    ("token_entropy", "n_words"),
+    ("chunk_dedup", "n_kept"),
+    ("curation_pipeline", "n_kept"),
+]
+
+
+@pytest.mark.parametrize("name,col", INTEGER_COUNTS)
+def test_count_columns_are_integer_in_both_engines(spark, duck, name, col):
+    spark_pdf = entry_mod.queries()[name](spark, SF_DIR).select(col).toPandas()
+    duck_pdf = duck.execute(entry_mod.oracle_sql()[name]).df()
+    for engine, pdf in (("spark", spark_pdf), ("duckdb", duck_pdf)):
+        assert pd.api.types.is_integer_dtype(pdf[col]), (
+            f"{name}.{col}: {engine} returned {pdf[col].dtype}"
+        )
 
 
 def test_rows_only_queries(spark):

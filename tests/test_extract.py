@@ -10,6 +10,11 @@ import pandas as pd
 import pytest
 
 from ocr_spark import corpus
+from ocr_spark.functions.textnorm import (
+    FIGURE_REF_PATTERNS,
+    LAYOUT_PATTERNS,
+    MATH_PATTERNS,
+)
 from ocr_spark.operators.extract import (
     convert_text_reference_exact,
     extract_docs,
@@ -211,3 +216,40 @@ def test_render_markdown(spark, golden_df):
 def test_extract_plan_is_shuffle_free(spark, golden_df):
     plan = extract_docs(golden_df)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, f"narrow path must not shuffle:\n{plan}"
+
+
+def test_extract_plan_runs_the_chain_once(spark):
+    """_split_span reads its split parts three times; bound from a lambda
+    body, Catalyst re-inlines the split — and the whole NUL + T4 + T6 + T5
+    chain under it — at each use (3 copies, chain run twice per span). The
+    split must stay a HOF argument so both paths hold exactly one copy."""
+    chain = 1 + len(MATH_PATTERNS) + len(LAYOUT_PATTERNS) + len(FIGURE_REF_PATTERNS)
+    # a generated (non-local) source: the optimizer folds a LocalRelation away
+    docs = corpus.generate_docs(spark, 4, seed=1, partitions=2)
+    for op in (extract_docs, extract_docs_salted):
+        plan = op(docs)._jdf.queryExecution().optimizedPlan().toString()
+        n = plan.count("regexp_replace(")
+        assert n == chain, f"{op.__name__}: {n} regexp_replace nodes, want {chain}"
+
+
+EDGE_TEXTS = [
+    "[図1]",
+    "[図1][表2]",
+    "[図1] between [Table3]",
+    "",
+    "a\x00[図1]\x00b",
+    "a\x00b",
+]
+
+
+@pytest.mark.parametrize("op", [extract_docs, extract_docs_salted])
+def test_split_promote_edge_cases(spark, op):
+    """Span-exact on the split/promote branches: whole-ref spans, adjacent
+    refs, refs at both ends, the empty span and content NULs (which the
+    property test's alphabet never produces)."""
+    docs = [
+        _mk(f"E{i:02d}_page_000001", [("text", t, None), ("text", "tail", None)])
+        for i, t in enumerate(EDGE_TEXTS)
+    ]
+    df = spark.createDataFrame(pd.DataFrame(docs), schema=DOC_SCHEMA)
+    assert spans_of(op(df)) == _oracle_spans(docs)
