@@ -47,7 +47,6 @@ from ocr_spark.operators.dedup import (
     exact_dedup,
     jaccard_pairs,
     minhash_lsh_candidates,
-    simhash_dup_pairs,
 )
 from ocr_spark.operators.extract import render_markdown
 from ocr_spark.operators.sampling import stride_sample
@@ -429,7 +428,8 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected-component duplicate clustering (min-label propagation):
+    """Connected-component duplicate clustering (alternating large-star/
+    small-star, the ``dup_clusters`` default):
     chain edges planted on doc ids (i—i+1e5—i+2e5 for i%7==0, plus
     i—i+3e5 for i%5==0) must resolve TRANSITIVELY to the smallest reachable
     id; the oracle recomputes components with a recursive CTE."""
@@ -1445,13 +1445,12 @@ def q_simhash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     un = docs.unionByName(near).withColumn(
         "doc_id", F.lpad(F.col("doc_id").cast("string"), 7, "0")
     )
-    # 8 blocks of 8 bits, PAIR-of-blocks candidate indexes (the ≥10⁹-doc
-    # scale path: 2^16 buckets per index instead of 2^8): pigeonhole
-    # guarantees full recall at hamming <= n_blocks-2 = 6, exactly the ask.
-    # The oracle's result set is {pairs at hamming <= 6} — candidate-scheme
-    # independent, so single-block and pair-index implementations both
-    # satisfy it; gating the pair-index path proves the scale design.
-    return simhash_md5_dup_pairs(un, max_hamming=6, n_blocks=8, multi_index=True).select(
+    # 8 blocks of 8 bits, PAIR-of-blocks candidate indexes (2^16 buckets
+    # per index): pigeonhole guarantees full recall at hamming <=
+    # n_blocks-2 = 6, exactly the ask. The oracle computes {pairs at
+    # hamming <= 6} by brute force, with no candidate scheme at all, so the
+    # gate checks both the recall guarantee and the verify step.
+    return simhash_md5_dup_pairs(un, max_hamming=6, n_blocks=8).select(
         F.col("id_a").cast("long").alias("id_a"),
         F.col("id_b").cast("long").alias("id_b"),
         "hamming",

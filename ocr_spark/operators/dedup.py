@@ -93,29 +93,6 @@ def with_shingles(
     return w.withColumn(out_col, shingles).drop("__words")
 
 
-def minhash_signature(shingles: Column, n_hashes: int = 32, seed: int = 42) -> Column:
-    """MinHash signature: array of ``n_hashes`` minima of per-permutation
-    shingle hashes. Each permutation h is ``xxhash64(shingle, seed+h)``.
-
-    NB: the per-permutation salt must be bound via a real closure — a
-    two-parameter lambda (``lambda s, _h=h``) would be interpreted by
-    ``F.transform`` as an (element, index) lambda and silently receive the
-    array index instead of the salt.
-
-    PERFORMANCE WARNING: as a pure column expression this re-evaluates the
-    ``shingles`` argument once per permutation (Catalyst collapses projections
-    and re-inlines aliases, and codegen CSE cannot hoist out of lambda
-    bodies) — measured 30x slower than :func:`minhash_signatures` on real
-    text. Use it only where the shingle array is already a stored column;
-    the LSH pipeline uses the explode-based form below.
-    """
-
-    def _minhash(salt: int) -> Column:
-        return F.array_min(F.transform(shingles, lambda s: F.xxhash64(s, F.lit(salt))))
-
-    return F.array(*[_minhash(seed + h) for h in range(n_hashes)])
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -128,8 +105,7 @@ def minhash_signatures(
 
     Shingling runs ONCE per row; each shingle is hashed ``n_hashes`` times;
     per-permutation minima come from a map-side-combined ``min`` aggregation,
-    so the shuffle carries only ``n_hashes`` longs per document. Identical
-    output to :func:`minhash_signature`.
+    so the shuffle carries only ``n_hashes`` longs per document.
     """
     # explode_OUTER, deliberately: plain explode makes the optimizer infer a
     # `size(shingles) > 0` Filter and push it below the words projection,
@@ -298,11 +274,11 @@ def _edge_signature(edges: DataFrame):
     """One-pass set signature for the fixpoint check: ``(count,
     sum(xxhash64(u, v)), bit_xor(xxhash64(u, v)))`` over the (distinct)
     edge set. Two different sets collide only if count AND the 64-bit sum
-    AND the 64-bit xor all match — ~2⁻¹²⁸, the same standard as the
-    ExactSubstr dual-xxhash64 window keys. Replaces the earlier exact
-    ``exceptAll ∪ exceptAll → isEmpty`` check, which shuffled BOTH edge
-    sets twice per round and dominated the loop once the edge set shrank
-    (the r5 ccskew scaling leg read 0.374 N→4N from that overhead)."""
+    AND the 64-bit xor all match. It is the cheap per-round screen: an
+    exact ``exceptAll`` check every round shuffled BOTH edge sets and
+    dominated the loop once the edge set shrank (the r5 ccskew scaling leg
+    read 0.374 N→4N from that overhead), so :func:`_star_components` runs
+    the exact check only when two signatures match."""
     h = F.xxhash64("u", "v")
     # decimal(38,0) sum: a long sum of 64-bit hashes overflows under ANSI
     # mode; 10^12 edges × 2^63 still fits 38 digits with room to spare
@@ -325,6 +301,10 @@ def _star_components(
     ``(node→min mapping, rounds, converged)``; under non-convergence the
     mapping is the partial ``groupBy-min`` of the remaining edges.
 
+    Convergence is exact, never a hash guess: a round whose
+    :func:`_edge_signature` matches the previous one is confirmed with one
+    ``exceptAll``; on a collision the loop keeps iterating.
+
     Each round's output is repartitioned to the session default
     parallelism before the checkpoint: localCheckpoint freezes the RDD's
     partition count, and the per-round ``unionByName`` inside the star
@@ -343,7 +323,9 @@ def _star_components(
             _small_star(_large_star(edges)).repartition(width).localCheckpoint()
         )
         new_sig = _edge_signature(new_edges)
-        converged = new_sig == sig
+        # both sets are distinct and a match means equal counts, so one
+        # direction of the difference being empty proves them equal
+        converged = new_sig == sig and edges.exceptAll(new_edges).isEmpty()
         edges, sig = new_edges, new_sig
     # at fixpoint each non-root has exactly one edge (u, root); the
     # groupBy-min is the identity there and a safe partial label otherwise
@@ -518,68 +500,23 @@ def embedding_near_dup_ids(
     return pairs.select(F.col("id_b").alias(id_col)).distinct()
 
 
-def simhash64(col: Column | str, seed: int = 42) -> Column:
-    """64-bit SimHash of normalized text, fully native.
-
-    PERFORMANCE FOOTGUN — prefer :func:`simhash_signatures` in any corpus
-    path: Catalyst does no CSE inside HOF lambdas, so the ``xxhash64(w)``
-    referenced from the per-bit ``transform`` below is re-evaluated 64×
-    PER WORD (and HOF lambdas run interpreted, outside whole-stage
-    codegen) — measured ~60× slower than the exploded builder on a 120k-doc
-    corpus. This scalar form survives for single-value/debug use only.
-
-    Per word w: h = xxhash64(w, seed); bit j contributes +1 if set else −1 to
-    counter j; the final hash sets bit j when counter j > 0. Implemented as an
-    ``aggregate`` over a 64-length counter array. Column-valued shift amounts
-    go through ``call_function`` (the SQL ShiftLeft/ShiftRight expressions
-    accept arbitrary child expressions; only the typed wrapper is int-only).
-    """
-    words = F.split(normalized_text(col), " ")
-    bits = F.sequence(F.lit(0), F.lit(63))
-    counters = F.aggregate(
-        words,
-        F.transform(bits, lambda _: F.lit(0)),
-        lambda acc, w: F.zip_with(
-            acc,
-            F.transform(
-                bits,
-                lambda j: F.when(
-                    F.call_function(
-                        "shiftright", F.xxhash64(w, F.lit(seed)), j.cast("int")
-                    ).bitwiseAND(F.lit(1))
-                    == 1,
-                    1,
-                ).otherwise(-1),
-            ),
-            lambda a, b: a + b,
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            counters,
-            bits,
-            lambda c, j: F.when(
-                c > 0, F.call_function("shiftleft", F.lit(1).cast("long"), j.cast("int"))
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc.bitwiseOR(x),
-    )
-
-
 def simhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 42,
 ) -> DataFrame:
-    """(id, sh) — the corpus-path SimHash builder: words EXPLODED, each
-    hashed ONCE (vs 64× inside :func:`simhash64`'s per-bit lambda — no CSE
-    in HOFs), 64 bit counters as map-side-combined conditional sums (the
-    shuffle carries 64 ints per doc), bits packed back into one long with
-    pure shift/mask — everything whole-stage-codegen'd. Bit-identical to
-    ``simhash64`` for non-null text; NULL text packs to 0 where the scalar
-    returns NULL (the :func:`simhash_bits_md5` convention)."""
+    """(id, sh) — 64-bit SimHash of normalized text, the xxhash64 scale
+    default. Per word w: h = xxhash64(w, seed); bit j of h counts +1 if set,
+    else −1; ``sh`` sets bit j when its count is > 0. NULL text packs to 0
+    (the :func:`simhash_bits_md5` convention).
+
+    Words are EXPLODED and each hashed ONCE (a per-bit ``transform`` over
+    ``xxhash64(w)`` re-evaluates the hash 64× per word — no CSE in HOF
+    lambdas — measured ~60× slower), the 64 bit counters are
+    map-side-combined conditional sums (the shuffle carries 64 ints per
+    doc), and the bits pack back into one long with pure shift/mask —
+    everything whole-stage-codegen'd."""
     exploded = df.select(
         F.col(id_col).alias("id"),
         # outer: the optimizer's inferred size()>0 filter would re-evaluate
@@ -600,79 +537,32 @@ def simhash_signatures(
             for j in range(64)
         ]
     )
+    return counters.select(
+        "id", _pack64(lambda j: F.col(f"__c{j}") > 0).alias("sh")
+    )
 
-    def _pack(start: int) -> Column:
+
+def _pack64(bit_set) -> Column:
+    """One long whose bit j is set where the boolean column ``bit_set(j)``
+    holds. Each 32-bit half sums below 2³², so the shift+or is exact (a
+    ``1 << 63`` literal would not fit a long)."""
+
+    def _half(start: int) -> Column:
         return sum(
-            F.when(F.col(f"__c{start + j}") > 0, F.lit(1 << j).cast("long")).otherwise(
+            F.when(bit_set(start + j), F.lit(1 << j).cast("long")).otherwise(
                 F.lit(0).cast("long")
             )
             for j in range(32)
         )
 
-    return counters.select(
-        "id",
-        F.shiftleft(_pack(32), 32).bitwiseOR(_pack(0)).alias("sh"),
-    )
-
-
-def simhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-    n_blocks: int = 4,
-) -> DataFrame:
-    """Hamming-style SimHash blocking: split the 64-bit hash into
-    ``n_blocks`` 16-bit blocks; near-dups (few differing bits) must share at
-    least one block → groupBy per block. Candidate pairs carry both hashes
-    for downstream Hamming verification. Cross-index duplicates are removed
-    by the canonical-index filter (:func:`_first_equal_block`) — a per-row
-    predicate, not a ``dropDuplicates`` exchange over the pair stream."""
-    base = simhash_signatures(df, text_col, id_col, seed)
-    width = 64 // n_blocks
-    blocks = base.select(
-        "id",
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sh"), b * width).bitwiseAND(F.lit((1 << width) - 1))
-                    for b in range(n_blocks)
-                ]
-            )
-        ).alias("block", "block_val"),
-    )
-    a = blocks.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"), "block", "block_val")
-    b = blocks.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"), "block", "block_val")
-    return (
-        a.join(b, ["block", "block_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(
-            F.col("block")
-            == _first_equal_block(
-                F.col("sh_a").bitwiseXOR(F.col("sh_b")), n_blocks, width
-            )
-        )
-        .select("id_a", "id_b", "sh_a", "sh_b")
-    )
-
-
-def _check_simhash_recall(max_hamming: int, n_blocks: int) -> None:
-    """Pigeonhole: a pair at hamming h shares ≥1 block only when
-    h < n_blocks. Asking for max_hamming ≥ n_blocks would SILENTLY miss
-    pairs whose differing bits spread across every block — refuse."""
-    if max_hamming >= n_blocks:
-        raise ValueError(
-            f"max_hamming={max_hamming} needs n_blocks > max_hamming for "
-            f"guaranteed recall (got n_blocks={n_blocks}): pairs with one "
-            "differing bit per block would share no block and be missed"
-        )
+    return F.shiftleft(_half(32), 32).bitwiseOR(_half(0))
 
 
 def _check_simhash_recall_multi(max_hamming: int, n_blocks: int) -> None:
     """Pair-of-blocks pigeonhole: h differing bits dirty at most h blocks,
     so ≥2 blocks stay clean — and some PAIR of clean blocks is shared —
-    exactly when h ≤ n_blocks − 2."""
+    exactly when h ≤ n_blocks − 2. Asking for more would SILENTLY miss
+    pairs whose differing bits spread across the blocks — refuse."""
     if max_hamming > n_blocks - 2:
         raise ValueError(
             f"max_hamming={max_hamming} needs n_blocks >= max_hamming + 2 "
@@ -682,36 +572,19 @@ def _check_simhash_recall_multi(max_hamming: int, n_blocks: int) -> None:
         )
 
 
-def _first_equal_block(xor64: Column, n_blocks: int, width: int) -> Column:
-    """Index of the FIRST equal block between two simhashes (least b whose
-    ``width``-bit slice of their xor is zero); NULL when no block is equal.
+def _first_equal_pair_idx(xor64: Column, n_blocks: int, width: int) -> Column:
+    """Least ``pidx = i*n_blocks + j`` over block pairs (i<j) whose
+    ``width``-bit slices of the two hashes' xor are BOTH zero; NULL when
+    none.
 
     Canonical-index dedup: a near-dup pair surfaces once per shared block
-    (index), so keeping it only where ``block == _first_equal_block(...)``
+    pair (index), so keeping it only where ``pidx == _first_equal_pair_idx``
     leaves exactly one copy — as a per-row, map-side filter. This replaces
     ``dropDuplicates([id_a, id_b])``, whose exchange shuffles the FULL
     candidate-pair stream (on a self-similar corpus, the largest dataset in
     the whole job: measured 135 s → 57 s on a 500k-doc corpus at 8 cores
     when removed). Every joined pair has its own index equal, so the least
     is non-NULL for real candidates and recall is untouched."""
-    mask = (1 << width) - 1
-    return F.least(
-        *[
-            F.when(
-                F.shiftright(xor64, b * width).bitwiseAND(F.lit(mask)) == 0,
-                F.lit(b),
-            )
-            for b in range(n_blocks)
-        ]
-    )
-
-
-def _first_equal_pair_idx(xor64: Column, n_blocks: int, width: int) -> Column:
-    """Least ``pidx = i*n_blocks + j`` over block pairs (i<j) with BOTH
-    blocks equal; NULL when none. The pair-of-blocks analogue of
-    :func:`_first_equal_block` — same canonical-index dedup, same shuffle
-    elimination, one surviving copy per pair across the C(n_blocks,2)
-    indexes."""
     mask = (1 << width) - 1
     eqs = [
         F.shiftright(xor64, b * width).bitwiseAND(F.lit(mask)) == 0
@@ -730,16 +603,15 @@ def _pair_index_candidates(
     base: DataFrame,
     n_blocks: int,
     width: int,
-    id_col: str = "id",
     payload_cols: tuple[str, ...] = (),
-    dedup: bool = True,
-    keep_index: bool = False,
 ) -> DataFrame:
-    """Multi-index SimHash blocking: candidate pairs share at least one
-    clean PAIR of blocks — C(n_blocks, 2) indexes, each keyed by the
-    concatenation of two block values (2·width bits).
+    """Multi-index SimHash blocking over ``base`` = (id, payloads,
+    block_0..block_{n-1}): candidate pairs (id_a < id_b, payloads suffixed
+    ``_a``/``_b``, ``pidx``) share at least one clean PAIR of blocks —
+    C(n_blocks, 2) indexes, each keyed by the concatenation of two block
+    values (2·width bits).
 
-    This is the ≥10⁹-doc scale fix for single-block bucketing: one 8-bit
+    Single-block bucketing is the ≥10⁹-doc hazard this avoids: one 8-bit
     block gives only 2⁸ = 256 buckets per index (per-bucket self-joins go
     quadratic on a large corpus), while a block PAIR gives 2¹⁶ = 65,536
     buckets per index — bucket occupancy drops ~2^width× at the cost of
@@ -748,23 +620,18 @@ def _pair_index_candidates(
 
     Shuffle shape: (id, payloads, pidx, pkey) rides the explode. Generate
     copies its child columns into every output row, so ``payload_cols``
-    must be NARROW scalars (the packed 64-bit hash halves: ≤16 bytes ×
-    C(n,2) copies per doc) — carrying them beats the alternative (two
-    id-keyed corpus-wide rejoins that each recompute the per-word hash
-    aggregation upstream: measured 3× full-scan duplication, zero
-    ReusedExchange). A WIDE payload (the 64-int bits array) must instead
-    rejoin on id after the pair join. Block values are materialized
-    columns, so the exploded array is cheap (no inferred-filter
-    re-substitution hazard).
+    must be NARROW scalars (the packed 64-bit hash: 8 bytes × C(n,2)
+    copies per doc) — carrying them beats the alternative (two id-keyed
+    corpus-wide rejoins that each recompute the per-word hash aggregation
+    upstream: measured 3× full-scan duplication, zero ReusedExchange). A
+    WIDE payload (the 64-int bits array) must instead rejoin on id after
+    the pair join. Block values are materialized columns, so the exploded
+    array is cheap (no inferred-filter re-substitution hazard).
 
-    ``dedup=False`` returns raw per-index matches (a pair appears exactly
-    once per shared clean block-pair — each doc contributes one row per
-    index, so the per-index bucket join cannot repeat a pair) so callers
-    can apply cheap per-row filters: Hamming ≤ k on the carried payloads,
-    then the canonical-index filter (``pidx == _first_equal_pair_idx``,
-    pass ``keep_index=True`` to retain ``pidx``) which replaces the
-    ``dropDuplicates`` exchange entirely — no shuffle ever carries the
-    candidate-pair stream."""
+    The output is the raw per-index matches: a pair appears exactly once
+    per shared clean block pair (each doc contributes one row per index,
+    so the per-index bucket join cannot repeat a pair). Callers keep one
+    copy with the canonical-index filter (:func:`_first_equal_pair_idx`)."""
     pairs = [(i, j) for i in range(n_blocks) for j in range(i + 1, n_blocks)]
     keys = F.array(
         *[
@@ -779,7 +646,7 @@ def _pair_index_candidates(
         ]
     )
     ex = base.select(
-        F.col(id_col).alias("id"), *payload_cols, F.explode(keys).alias("k")
+        "id", *payload_cols, F.explode(keys).alias("k")
     ).select(
         "id", *payload_cols, F.col("k.pidx").alias("pidx"), F.col("k.pkey").alias("pkey")
     )
@@ -797,13 +664,12 @@ def _pair_index_candidates(
     )
     out_cols = ["id_a", "id_b"] + [
         f"{p}_{s}" for p in payload_cols for s in ("a", "b")
-    ] + (["pidx"] if keep_index else [])
-    joined = (
+    ] + ["pidx"]
+    return (
         a.join(b, ["pidx", "pkey"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select(*out_cols)
     )
-    return joined.dropDuplicates(["id_a", "id_b"]) if dedup else joined
 
 
 def hamming64(a: Column | str, b: Column | str) -> Column:
@@ -813,56 +679,54 @@ def hamming64(a: Column | str, b: Column | str) -> Column:
     return F.bit_count(ca.bitwiseXOR(cb))
 
 
+def _simhash_pairs(base: DataFrame, max_hamming: int, n_blocks: int) -> DataFrame:
+    """(id, sh) → verified near-dup pairs (id_a < id_b, hamming ≤
+    ``max_hamming``), each exactly once. The 64-bit ``sh`` splits into
+    ``n_blocks`` blocks of 64/n_blocks bits for the pair-of-blocks indexes
+    and rides the candidate explode as the narrow payload; Hamming
+    verification and the canonical-index filter are both per-row, so NO
+    shuffle ever carries the candidate-pair stream."""
+    _check_simhash_recall_multi(max_hamming, n_blocks)
+    width = 64 // n_blocks
+    mask = F.lit((1 << width) - 1)
+    # arithmetic shiftright sign-extends; the mask makes that irrelevant
+    blocks = base.select(
+        "id",
+        "sh",
+        *[
+            F.shiftright("sh", b * width).bitwiseAND(mask).alias(f"block_{b}")
+            for b in range(n_blocks)
+        ],
+    )
+    return (
+        _pair_index_candidates(blocks, n_blocks, width, payload_cols=("sh",))
+        .withColumn("hamming", hamming64("sh_a", "sh_b"))
+        .filter(F.col("hamming") <= max_hamming)
+        .filter(
+            F.col("pidx")
+            == _first_equal_pair_idx(
+                F.col("sh_a").bitwiseXOR(F.col("sh_b")), n_blocks, width
+            )
+        )
+        .select("id_a", "id_b", "hamming")
+    )
+
+
 def simhash_dup_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
     seed: int = 42,
-    n_blocks: int = 4,
-    multi_index: bool = False,
+    n_blocks: int = 8,
 ) -> DataFrame:
-    """SimHash near-dup pairs (xxhash64 scale default). ``multi_index=True``
-    switches candidate generation to the pair-of-blocks indexes
-    (:func:`_pair_index_candidates`) — same output set whenever both
-    schemes' recall guards hold, 2^(64/n_blocks)× more buckets per index."""
-    if multi_index:
-        _check_simhash_recall_multi(max_hamming, n_blocks)
-        width = 64 // n_blocks
-        base = simhash_signatures(df, text_col, id_col, seed)
-        for b in range(n_blocks):
-            base = base.withColumn(
-                f"block_{b}",
-                F.shiftright(F.col("sh"), b * width).bitwiseAND(
-                    F.lit((1 << width) - 1)
-                ),
-            )
-        # carry the 8-byte hash through the explode (narrow payload — see
-        # _pair_index_candidates); Hamming verification and the
-        # canonical-index filter are both per-row, so NO shuffle ever
-        # carries the candidate-pair stream (the former dropDuplicates
-        # exchange dominated the job on self-similar corpora)
-        return (
-            _pair_index_candidates(
-                base, n_blocks, width, payload_cols=("sh",), dedup=False,
-                keep_index=True,
-            )
-            .withColumn("hamming", hamming64("sh_a", "sh_b"))
-            .filter(F.col("hamming") <= max_hamming)
-            .filter(
-                F.col("pidx")
-                == _first_equal_pair_idx(
-                    F.col("sh_a").bitwiseXOR(F.col("sh_b")), n_blocks, width
-                )
-            )
-            .select("id_a", "id_b", "hamming")
-        )
-    _check_simhash_recall(max_hamming, n_blocks)
-    return (
-        simhash_candidates(df, text_col, id_col, seed, n_blocks)
-        .withColumn("hamming", hamming64("sh_a", "sh_b"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    """SimHash near-dup pairs (id_a, id_b, hamming) over the xxhash64 scale
+    default (:func:`simhash_signatures`); candidates share ≥1 PAIR of
+    blocks (:func:`_pair_index_candidates`), so recall is guaranteed for
+    ``max_hamming ≤ n_blocks − 2`` and larger asks raise. Never
+    all-pairs."""
+    return _simhash_pairs(
+        simhash_signatures(df, text_col, id_col, seed), max_hamming, n_blocks
     )
 
 
@@ -931,85 +795,18 @@ def simhash_md5_dup_pairs(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_hamming: int = 3,
-    n_blocks: int = 4,
-    multi_index: bool = False,
+    n_blocks: int = 8,
 ) -> DataFrame:
-    """SimHash near-dup pairs with the md5-portable hash; Hamming verified
-    on the bit arrays. Never all-pairs.
+    """SimHash near-dup pairs (id_a, id_b, hamming) with the md5-portable
+    hash (:func:`simhash_bits_md5`); same candidate-and-verify path and
+    recall guarantee as :func:`simhash_dup_pairs`.
 
-    ``multi_index=False``: candidates share ≥1 single block (pigeonhole:
-    recall guaranteed for hamming < n_blocks; one shuffle on
-    (block, block_val); 2^(64/n_blocks) buckets per index — only 256 at
-    n_blocks=8, a quadratic hazard at ≥10⁹ docs).
-    ``multi_index=True``: candidates share ≥1 PAIR of blocks
-    (:func:`_pair_index_candidates`; recall for hamming ≤ n_blocks−2;
-    2^(2·64/n_blocks) buckets per index — 65,536 at n_blocks=8). Same
-    output set whenever both recall guards hold.
-
-    Either way the 64 bits ride the candidate explode PACKED into two
-    longs (``bit_count(xor)`` Hamming) — carrying the 64-int bits array
-    through a Generate, or rejoining it on id afterwards, each measured
-    slower (the rejoin recomputes the per-word hash aggregation upstream:
-    3× full-scan duplication, zero ReusedExchange)."""
-    base = simhash_bits_md5(df, text_col, id_col, n_blocks)
-
-    # pack 32 bits starting at `start` into a long (element_at is 1-based)
-    def _pack(start: int) -> Column:
-        return sum(
-            F.element_at("bits", start + j + 1).cast("long")
-            * F.lit(1 << j).cast("long")
-            for j in range(32)
-        )
-
-    base = base.withColumn("__lo", _pack(0)).withColumn("__hi", _pack(32))
-    hamming = hamming64(F.col("__lo_a"), F.col("__lo_b")) + hamming64(
-        F.col("__hi_a"), F.col("__hi_b")
+    The 64 bits ride the candidate explode PACKED into one long
+    (``bit_count(xor)`` Hamming) — carrying the 64-int bits array through
+    a Generate, or rejoining it on id afterwards, each measured slower
+    (the rejoin recomputes the per-word hash aggregation upstream: 3×
+    full-scan duplication, zero ReusedExchange)."""
+    base = simhash_bits_md5(df, text_col, id_col).select(
+        "id", _pack64(lambda j: F.element_at("bits", j + 1) == 1).alias("sh")
     )
-    # full 64-bit xor reassembled from the halves (each half < 2^32, so the
-    # shift+or is exact) — feeds the canonical-index filters, which replace
-    # the dropDuplicates exchange with a per-row predicate (masking makes
-    # the arithmetic shiftright sign-extension irrelevant)
-    xor64 = F.shiftleft(
-        F.col("__hi_a").bitwiseXOR(F.col("__hi_b")), 32
-    ).bitwiseOR(F.col("__lo_a").bitwiseXOR(F.col("__lo_b")))
-    width = 64 // n_blocks
-    if multi_index:
-        _check_simhash_recall_multi(max_hamming, n_blocks)
-        cands = _pair_index_candidates(
-            base, n_blocks, width, payload_cols=("__lo", "__hi"), dedup=False,
-            keep_index=True,
-        ).filter(F.col("pidx") == _first_equal_pair_idx(xor64, n_blocks, width))
-    else:
-        _check_simhash_recall(max_hamming, n_blocks)
-        blocks = base.select(
-            "id",
-            "__lo",
-            "__hi",
-            F.posexplode(
-                F.array(*[F.col(f"block_{b}") for b in range(n_blocks)])
-            ).alias("block", "block_val"),
-        )
-        a = blocks.select(
-            F.col("id").alias("id_a"),
-            F.col("__lo").alias("__lo_a"),
-            F.col("__hi").alias("__hi_a"),
-            "block",
-            "block_val",
-        )
-        b = blocks.select(
-            F.col("id").alias("id_b"),
-            F.col("__lo").alias("__lo_b"),
-            F.col("__hi").alias("__hi_b"),
-            "block",
-            "block_val",
-        )
-        cands = (
-            a.join(b, ["block", "block_val"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .filter(F.col("block") == _first_equal_block(xor64, n_blocks, width))
-        )
-    return (
-        cands.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
+    return _simhash_pairs(base, max_hamming, n_blocks)

@@ -105,11 +105,10 @@ JOBS = {{
         detect_regions(spark.read.parquet(corpus + "_tokens"),
                        column_width=400.0, gap_threshold=30.0)
     ),
-    # the gate's scale configuration: pair-of-blocks multi-index over the
+    # the gate's scale configuration: pair-of-blocks indexes over the
     # xxhash64 scale default (exploded simhash_signatures builder)
     "simhash": lambda: simhash_dup_pairs(
-        spark.read.parquet(corpus + "_text"),
-        max_hamming=3, n_blocks=8, multi_index=True
+        spark.read.parquet(corpus + "_text"), max_hamming=3, n_blocks=8
     ),
     # corpus-curation scale paths over the same rendered-text input:
     # chunk_dedup = the family's real corpus-wide shuffle (min-struct
@@ -205,10 +204,10 @@ JOBS = {{
     # (model-sized shuffles) + the broadcast-llr scoring join over the raw
     # pool (the classify joined shape), 2^16 buckets, unigram+bigram
     "dsir": lambda: _dsir_job(),
-    # connected components under a giant-DIAMETER component: a 50k-node
+    # connected components under a giant-DIAMETER component: a 200k-link
     # chain (worst case for any propagation scheme — min-label would need
-    # 50k rounds) + the gate's modular background pairs at 500k nodes.
-    # The alternating-star rounds bound is diameter-independent (~17
+    # 200k rounds) + the gate's modular background pairs over 20M nodes.
+    # The alternating-star rounds bound is diameter-independent (~18
     # rounds here); each round is two groupBy+join passes over a
     # shrinking edge set, so the leg measures how the round-serialized
     # fixpoint loop scales N->4N (the per-round barrier is the risk,
@@ -603,7 +602,7 @@ def main() -> None:
         "dsir": "DSIR importance scoring (2-corpus fit + broadcast-llr join)",
         "substrdedup": "ExactSubstr dedup (dual-hash window keeper + rebuild)",
         "langid": "trained language ID (char-trigram NB, broadcast model)",
-        "ccskew": "connected components, 50k-diameter chain (alternating star)",
+        "ccskew": "connected components, 200k-link chain over 20M nodes (alternating star)",
     }
     extra_jobs = [j for j in jobs_run if j != "extract"]
     # _labels.get(j, j): an unlabeled job key must never KeyError AFTER the

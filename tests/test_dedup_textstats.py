@@ -21,7 +21,6 @@ from ocr_spark.operators.dedup import (
     jaccard_pairs,
     minhash_dedup,
     minhash_lsh_candidates,
-    simhash64,
     simhash_dup_pairs,
     word_shingles,
 )
@@ -110,36 +109,47 @@ def test_simhash_md5_variant_matches_python_oracle(spark, docs_df):
     assert ("b1", "b2") not in pairs
 
 
-def test_simhash_multi_index_matches_single_block(spark, docs_df):
-    """Pair-of-blocks candidates must yield EXACTLY the single-block result
-    set whenever both recall guards hold (the verified pairs are a pure
-    function of the hashes; only candidate pruning differs) — for both the
-    xxhash64 and md5 variants."""
-    from ocr_spark.operators.dedup import simhash_md5_dup_pairs
+def test_simhash_dup_pairs_match_brute_force(spark, docs_df):
+    """Both variants' pair-of-blocks candidate-and-verify path must return
+    EXACTLY the pairs a brute-force scan over every pair's 64-bit
+    signature finds at popcount(xor) <= k — recall (the pigeonhole guard)
+    and precision (no phantom pairs), with the hamming values exact."""
+    from ocr_spark.operators.dedup import (
+        simhash_bits_md5,
+        simhash_md5_dup_pairs,
+        simhash_signatures,
+    )
 
-    single = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_dup_pairs(docs_df, max_hamming=12, n_blocks=16).collect()
+    # shared vocabulary → exact copies plus pairs at assorted small distances
+    extra = spark.createDataFrame(
+        [(f"x{i:02d}", f"some words repeated {i % 7} across documents {i % 3}")
+         for i in range(30)],
+        "doc_id string, text string",
+    )
+    docs = docs_df.unionByName(extra)
+    sigs = {
+        "xxhash64": {r.id: r.sh for r in simhash_signatures(docs).collect()},
+        "md5": {
+            r.id: sum(bit << j for j, bit in enumerate(r.bits))
+            for r in simhash_bits_md5(docs).collect()
+        },
     }
-    multi = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_dup_pairs(
-            docs_df, max_hamming=12, n_blocks=16, multi_index=True
-        ).collect()
-    }
-    assert single == multi and ("a1", "a2") in multi
-
-    single_md5 = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_md5_dup_pairs(docs_df, max_hamming=12, n_blocks=16).collect()
-    }
-    multi_md5 = {
-        (r.id_a, r.id_b): r.hamming
-        for r in simhash_md5_dup_pairs(
-            docs_df, max_hamming=12, n_blocks=16, multi_index=True
-        ).collect()
-    }
-    assert single_md5 == multi_md5 and ("a1", "a2") in multi_md5
+    fns = {"xxhash64": simhash_dup_pairs, "md5": simhash_md5_dup_pairs}
+    for variant, sig in sigs.items():
+        ids = sorted(sig)
+        for n_blocks, k in ((16, 12), (8, 6)):
+            want = {}
+            for i, a in enumerate(ids):
+                for b in ids[i + 1 :]:
+                    h = bin((sig[a] ^ sig[b]) & ((1 << 64) - 1)).count("1")
+                    if h <= k:
+                        want[(a, b)] = h
+            got = {
+                (r.id_a, r.id_b): r.hamming
+                for r in fns[variant](docs, max_hamming=k, n_blocks=n_blocks).collect()
+            }
+            assert got == want, (variant, n_blocks, k)
+            assert any(h > 0 for h in want.values()), (variant, n_blocks, k)
 
 
 def test_simhash_multi_index_recall_guard(spark, docs_df):
@@ -148,9 +158,12 @@ def test_simhash_multi_index_recall_guard(spark, docs_df):
     from ocr_spark.operators.dedup import simhash_md5_dup_pairs
 
     with pytest.raises(ValueError, match="pair-index recall"):
-        simhash_dup_pairs(docs_df, max_hamming=7, n_blocks=8, multi_index=True)
+        simhash_dup_pairs(docs_df, max_hamming=7, n_blocks=8)
     with pytest.raises(ValueError, match="pair-index recall"):
-        simhash_md5_dup_pairs(docs_df, max_hamming=15, n_blocks=16, multi_index=True)
+        simhash_md5_dup_pairs(docs_df, max_hamming=15, n_blocks=16)
+    # the defaults (max_hamming=3, n_blocks=8) satisfy the guard
+    simhash_dup_pairs(docs_df)
+    simhash_md5_dup_pairs(docs_df)
 
 
 def test_simhash_pair_index_occupancy_sublinear(spark):
@@ -215,7 +228,12 @@ def test_simhash_pair_index_occupancy_sublinear(spark):
     assert 2 * pair_occ <= single_occ, (pair_occ, single_occ)
 
     # candidate volume: pair-index candidates ⊆ never exceed single-block's
-    n_pair_cands = _pair_index_candidates(base, n_blocks, width).count()
+    n_pair_cands = (
+        _pair_index_candidates(base, n_blocks, width)
+        .select("id_a", "id_b")
+        .distinct()
+        .count()
+    )
     blocks = base.select(
         "id",
         F.posexplode(
@@ -337,6 +355,23 @@ def test_dup_clusters_star_bounds_rounds_on_long_chains(spark):
         dup_clusters(chain, max_iter=20, method="propagation")
 
 
+def test_dup_clusters_star_confirms_signature_match_exactly(spark, monkeypatch):
+    """A matching edge-set signature is only a screen: with every signature
+    forced to collide (round 1 already "matches"), the exact exceptAll
+    confirmation must keep the loop going until the chain truly resolves."""
+    from ocr_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_edge_signature", lambda edges: (1, 2, 3))
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "id_a long, id_b long"
+    )
+    stats: dict = {}
+    got = {r.doc_id: r.cluster
+           for r in dedup.dup_clusters(chain, stats=stats).collect()}
+    assert got == {i: 0 for i in range(31)}
+    assert stats["rounds"] > 1
+
+
 def test_dup_clusters_methods_agree_on_random_graphs(spark):
     """Property check: star and propagation produce IDENTICAL (id, cluster)
     maps on a seeded random mix of chains, stars, cliques, and isolated
@@ -452,9 +487,7 @@ def test_simhash_canonical_index_emits_each_pair_once(spark, docs_df):
 
     for fn, kw in [
         (simhash_dup_pairs, {"max_hamming": 12, "n_blocks": 16}),
-        (simhash_dup_pairs, {"max_hamming": 12, "n_blocks": 16, "multi_index": True}),
         (simhash_md5_dup_pairs, {"max_hamming": 12, "n_blocks": 16}),
-        (simhash_md5_dup_pairs, {"max_hamming": 12, "n_blocks": 16, "multi_index": True}),
     ]:
         pairs = [(r.id_a, r.id_b) for r in fn(docs_df, **kw).collect()]
         assert len(pairs) == len(set(pairs)), (fn.__name__, kw)

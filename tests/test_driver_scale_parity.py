@@ -55,7 +55,7 @@ def _py_simhash64(text: str) -> int:
 
 
 def test_simhash_dups_full_sf001_matches_python_oracle(spark):
-    """The pair-of-blocks multi-index path over the FULL 500-doc corpus
+    """The pair-of-blocks candidate path over the FULL 500-doc corpus
     (plus 125 planted near-copies) must produce exactly the all-pairs
     hamming<=6 set a brute-force Python SimHash computes — recall
     (pigeonhole at n_blocks-2) AND precision (no phantom pairs), with the
@@ -72,14 +72,10 @@ def test_simhash_dups_full_sf001_matches_python_oracle(spark):
     )
     got = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in simhash_md5_dup_pairs(
-            un, max_hamming=6, n_blocks=8, multi_index=True
-        ).collect()
+        for r in simhash_md5_dup_pairs(un, max_hamming=6, n_blocks=8).collect()
     }
     # no duplicated pairs from the multi-index candidate streams
-    assert len(got) == simhash_md5_dup_pairs(
-        un, max_hamming=6, n_blocks=8, multi_index=True
-    ).count()
+    assert len(got) == simhash_md5_dup_pairs(un, max_hamming=6, n_blocks=8).count()
 
     rows = un.collect()
     sigs = {r["doc_id"]: _py_simhash64(r["text"]) for r in rows}

@@ -223,18 +223,17 @@ def test_simhash_pair_stream_never_shuffles(spark):
     either hash variant."""
     from ocr_spark.operators.dedup import simhash_dup_pairs
 
-    plan = _plan(spark, "simhash_dups")  # md5-portable multi-index gate
+    plan = _plan(spark, "simhash_dups")  # md5-portable gate
     assert "HashAggregate(keys=[id_a" not in plan, plan[:2000]
     assert "hashpartitioning(id_a" not in plan, plan[:2000]
 
     rows = [(i, f"some words repeated {i % 7} across documents {i % 3}")
             for i in range(40)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    for multi in (False, True):
-        df = simhash_dup_pairs(docs, max_hamming=3, n_blocks=8, multi_index=multi)
-        p = df._jdf.queryExecution().executedPlan().toString()
-        assert "HashAggregate(keys=[id_a" not in p, p[:2000]
-        assert "hashpartitioning(id_a" not in p, p[:2000]
+    df = simhash_dup_pairs(docs, max_hamming=3, n_blocks=8)
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "HashAggregate(keys=[id_a" not in p, p[:2000]
+    assert "hashpartitioning(id_a" not in p, p[:2000]
 
 
 def test_ann_candidate_stream_never_distincts(spark):
